@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection CLI: prints the formatted physical plan of one or
   * all SparkEntry queries — the loop used to audit pushdown, pruning,
   * broadcast choices, and codegen coverage.
@@ -12,14 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("all")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cores = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val targets =
       if (name == "all") SparkEntry.queries.toSeq.sortBy(_._1)

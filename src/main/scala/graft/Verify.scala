@@ -1,24 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // earlier testdata generations shipped events.ts as
-      // TIMESTAMP(NANOS), which Spark 4 rejects unless read as raw
-      // longs; harmless for the current naive-micros shape —
-      // Tables.events normalizes every shape either way.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    // SPARK_GRAFT_VERIFY_THREADS=1 for driver-heavy replays (e.g. the
+    // streaming queries at a 100x replica collect the corpus to the
+    // driver — four in flight can exhaust even a large heap); parsed
+    // before the session starts so a bad value fails fast
+    val threads = GraftSession.positiveIntEnv("SPARK_GRAFT_VERIFY_THREADS", 4)
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // start from a clean slate: a leftover dump from a renamed or
     // removed query must not survive into this round's compare
@@ -32,11 +24,7 @@ object Verify {
     // jobs fine, and overlapping the per-query fixed costs (planning,
     // AQE stage turnaround) cuts the gate's wall-clock ~4x. Failures
     // stay per-query, like the sequential loop.
-    // SPARK_GRAFT_VERIFY_THREADS=1 for driver-heavy replays (e.g. the
-    // streaming queries at a 100x replica collect the corpus to the
-    // driver — four in flight can exhaust even a large heap)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     // SPARK_GRAFT_ONLY=a,b,c — builder-side iteration filter, same as
     // Bench; the driver never sets it, so the gate always runs all
     val only = sys.env.get("SPARK_GRAFT_ONLY")

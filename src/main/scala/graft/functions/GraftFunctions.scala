@@ -2,18 +2,24 @@ package graft.functions
 
 import graft.plans.{BestCentroid, CdcChunks, CosineSim, GramianAgg, Hash60Array, HashedShingles, HyperplaneBuckets, MinHashSig, SimHash60, SquaredDist, VecMeanAgg, VecWeightedSumAgg, WinnowFingerprints}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /** Session registration + Column builders for the native Catalyst
   * expressions in graft.plans. Spark 4's unified Column API has no
-  * public Expression→Column constructor, so the expressions are
-  * registered in the session FunctionRegistry and invoked via
-  * `call_function` (resolved at analysis).
+  * public Expression→Column constructor, so the expressions live in
+  * the session FunctionRegistry and are invoked via `call_function`
+  * (resolved at analysis). SQL users get the same functions by name
+  * (`SELECT graft_simhash60(...)`).
   *
-  * `register` is idempotent; operators call it on their input's
-  * session before building plans. SQL users get the same functions by
-  * name (`SELECT graft_simhash60(...)`).
+  * Two registration paths install the same `functions` builders:
+  *   - sessions from [[graft.GraftSession]] (and any session built with
+  *     [[graft.plans.GraftExtensions]]) have them from the start;
+  *   - every other session — a user's own, a `newSession()` clone —
+  *     gets them from `register`, which operators call on their input's
+  *     session before building plans. It registers only the names the
+  *     session lacks, so repeat calls change nothing.
   */
 object GraftFunctions {
 
@@ -48,11 +54,13 @@ object GraftFunctions {
     "graft_vec_mean" -> (es => VecMeanAgg(es(0))),
     "graft_vec_wsum" -> (es => VecWeightedSumAgg(es(0), es(1))))
 
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 
   /** Element-wise 60-bit md5 hash of a string array (fast path;
     * == TextFunctions.hash60 mapped over the array).

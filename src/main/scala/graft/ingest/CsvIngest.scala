@@ -14,16 +14,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Row identity: the reference relies on DuckDB ROWID / pandas index
   * (main.py:78,135). Spark has no stable implicit order, so we mint an
-  * explicit `_row_id`:
-  *   - `dense=false`: `monotonically_increasing_id` — order-consistent
-  *     with input order for a file-based read (partitions are
-  *     sequential file splits) at zero cost; all dedup first/last
-  *     needs is ordering, not density;
-  *   - `dense=true` (default, reference parity — pandas `index + 1`,
-  *     main.py:78): RDD `zipWithIndex`, which is fully distributed
-  *     (one lightweight job to count per-partition sizes, then a
-  *     per-partition offset add) — no single-partition window, no
-  *     global sort, survives a 100× scale-up.
+  * explicit dense 1-based `_row_id` (reference parity — pandas
+  * `index + 1`, main.py:78) with RDD `zipWithIndex`, which is fully
+  * distributed (one lightweight job to count per-partition sizes, then
+  * a per-partition offset add) — no single-partition window, no global
+  * sort, survives a 100× scale-up.
   */
 object CsvIngest {
 
@@ -35,35 +30,30 @@ object CsvIngest {
     * pipeline applies regardless of the wire format.
     */
   /** `fileAware=true` (csv only) mints layout-independent multi-file
-    * ids via [[readPathFileAware]] — `dense` is implied there (file
-    * order × in-file offset IS dense). Unsupported format+fileAware
-    * combinations throw rather than silently handing back
-    * layout-dependent ids the caller asked to avoid.
+    * ids via [[readPathFileAware]] (file order × in-file offset, also
+    * dense). Unsupported format+fileAware combinations throw rather
+    * than silently handing back layout-dependent ids the caller asked
+    * to avoid.
     */
-  def read(spark: SparkSession, spec: EntitySpec, dense: Boolean = true,
-      fileAware: Boolean = false): DataFrame =
+  def read(spark: SparkSession, spec: EntitySpec, fileAware: Boolean = false): DataFrame =
     spec.format match {
       case "csv" if fileAware => readPathFileAware(spark, spec.source)
       case other if fileAware =>
         throw new IllegalArgumentException(
           s"file_aware row ids are only supported for csv sources (entity '${spec.name}' has format '$other')")
-      case "csv" => readPath(spark, spec.source, dense)
+      case "csv" => readPath(spark, spec.source)
       case "json" | "parquet" | "orc" =>
         val raw = spark.read.format(spec.format).load(spec.source)
-        val asStrings = raw.select(raw.columns.map(c => col(c).cast("string").as(c)): _*)
-        if (dense) withDenseRowIds(asStrings)
-        else asStrings.withColumn(RowId, monotonically_increasing_id())
+        withDenseRowIds(raw.select(raw.columns.map(c => col(c).cast("string").as(c)): _*))
       case other =>
         throw new IllegalArgumentException(s"unsupported source format '$other' for entity '${spec.name}'")
     }
 
-  def readPath(spark: SparkSession, path: String, dense: Boolean = true): DataFrame = {
-    val raw = spark.read
+  def readPath(spark: SparkSession, path: String): DataFrame =
+    withDenseRowIds(spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
-      .csv(path)
-    if (dense) withDenseRowIds(raw) else raw.withColumn(RowId, monotonically_increasing_id())
-  }
+      .csv(path))
 
   /** Append 1-based dense input-order row ids via zipWithIndex. */
   def withDenseRowIds(df: DataFrame): DataFrame = {

@@ -1,8 +1,8 @@
 package graft.pipeline
 
+import graft.GraftSession
 import graft.config.PipelineConfig
 import graft.rules.ValidationStopException
-import org.apache.spark.sql.SparkSession
 import java.time.LocalDate
 
 /** CLI entry with the reference's surface (main.py:401-505):
@@ -40,14 +40,12 @@ object PipelineCli {
       sys.exit(2)
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
+    // nanosAsLong stays off: a TIMESTAMP(NANOS) parquet source must fail
+    // the import, not load as raw longs
+    val builder = GraftSession.builder()
       .appName(s"graft-pipeline-$entityName")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     try {

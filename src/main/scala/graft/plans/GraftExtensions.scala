@@ -6,12 +6,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions installer for the graft native functions —
-  * the registration path for sessions built outside our code
-  * (spark-submit `--conf spark.sql.extensions=graft.plans.GraftExtensions`,
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`).
-  * In-library operators register the same builders imperatively via
-  * GraftFunctions.register, so both entry styles see identical
-  * functions.
+  * the first registration path: [[graft.GraftSession]] installs it on
+  * every session it builds, and other deployments can opt in with
+  * spark-submit `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Sessions without it get the same builders from the idempotent
+  * GraftFunctions.register, which operators call on their input's
+  * session, so both paths see identical functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit =

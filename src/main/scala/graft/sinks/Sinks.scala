@@ -9,22 +9,16 @@ import scala.jdk.CollectionConverters._
 /** CSV sinks matching the reference's output layout:
   * `output/exports/{name}.csv` per projection (main.py:300-326) and
   * `output/errors/{entity}_{type}_errors.csv` per error set
-  * (main.py:367-399).
-  *
-  * `singleFile=true` reproduces the reference's one-file-per-projection
-  * layout via coalesce(1) + rename — the right call for an export the
-  * size a config-driven import handles. At cluster scale flip it off:
-  * the writer then emits a standard sharded directory `{name}.csv/`
-  * with no single-node merge bottleneck.
+  * (main.py:367-399). csv and json sinks reproduce the reference's
+  * one-file-per-output layout via coalesce(1) + rename — the right
+  * call for an export the size a config-driven import handles.
   */
 object Sinks {
 
   def exportProjection(df: DataFrame, name: String, outputDir: String,
-      singleFile: Boolean = true, format: String = "csv"): String = format match {
-    case "csv" =>
-      writeCsv(ordered(df), s"$outputDir/exports", s"$name.csv", singleFile)
-    case "json" =>
-      writeSingle(ordered(df), s"$outputDir/exports", s"$name.json", "json", singleFile)
+      format: String = "csv"): String = format match {
+    case "csv" | "json" =>
+      writeSingle(ordered(df), s"$outputDir/exports", s"$name.$format", format)
     case "parquet" | "orc" =>
       // columnar exports are inherently sharded; no single-file contortion
       val target = s"$outputDir/exports/$name.$format"
@@ -41,8 +35,7 @@ object Sinks {
     * `_row_id` never reaches the file (the reference exports its `rn`
     * but not its ROWID).
     */
-  def saveErrors(df: DataFrame, errorType: String, entity: String, outputDir: String,
-      singleFile: Boolean = true): Option[String] = {
+  def saveErrors(df: DataFrame, errorType: String, entity: String, outputDir: String): Option[String] = {
     if (df.isEmpty) None
     else {
       val flat = df.schema.find(_.name == "errors") match {
@@ -53,7 +46,7 @@ object Sinks {
       val lead = Seq("row", "errors").filter(flat.columns.contains)
       val rest = flat.columns.filterNot(c => lead.contains(c) || c == RowId)
       val shaped = ordered(flat).select((lead ++ rest).map(col): _*)
-      Some(writeCsv(shaped, s"$outputDir/errors", s"${entity}_${errorType}_errors.csv", singleFile))
+      Some(writeSingle(shaped, s"$outputDir/errors", s"${entity}_${errorType}_errors.csv", "csv"))
     }
   }
 
@@ -121,30 +114,18 @@ object Sinks {
     else if (df.columns.contains("row")) df.orderBy(col("row"))
     else df
 
-  private def writeCsv(df: DataFrame, dir: String, fileName: String, singleFile: Boolean): String =
-    writeSingle(df, dir, fileName, "csv", singleFile)
-
-  private def writeSingle(df: DataFrame, dir: String, fileName: String,
-      format: String, singleFile: Boolean): String = {
+  private def writeSingle(df: DataFrame, dir: String, fileName: String, format: String): String = {
     Files.createDirectories(Paths.get(dir))
     val target = s"$dir/$fileName"
-    def writer(d: DataFrame) = {
-      val w = d.write.mode("overwrite")
-      if (format == "csv") w.option("header", "true") else w
-    }
-    if (!singleFile) {
-      writer(df).format(format).save(target)
-      target
-    } else {
-      val tmp = s"$dir/.tmp_$fileName"
-      writer(df.coalesce(1)).format(format).save(tmp)
-      val part = Files.list(Paths.get(tmp)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
-      Files.move(part, Paths.get(target), StandardCopyOption.REPLACE_EXISTING)
-      // clean the temp dir (part metadata, _SUCCESS)
-      Files.walk(Paths.get(tmp)).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      target
-    }
+    val tmp = s"$dir/.tmp_$fileName"
+    val w = df.coalesce(1).write.mode("overwrite")
+    (if (format == "csv") w.option("header", "true") else w).format(format).save(tmp)
+    val part = Files.list(Paths.get(tmp)).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
+    Files.move(part, Paths.get(target), StandardCopyOption.REPLACE_EXISTING)
+    // clean the temp dir (part metadata, _SUCCESS)
+    Files.walk(Paths.get(tmp)).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    target
   }
 }

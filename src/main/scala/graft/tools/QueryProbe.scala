@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Iteration scratch harness (not a test): steady-state timing of one
   * or more queries (comma-separated), N interleaved rounds in a warm
   * JVM. Run with
@@ -13,12 +11,7 @@ object QueryProbe {
       (if (args.nonEmpty) args(0) else "q74_edit1_join").split(",").map(_.trim).toSeq
     val reps = if (args.length > 1) args(1).toInt else 4
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val builder = graft.GraftSession.builder()
     // ad-hoc conf overrides for hypothesis testing, e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.coalescePartitions.enabled=false"
     sys.env.get("SPARK_GRAFT_CONF").foreach { kvs =>

@@ -75,13 +75,8 @@ object ScaleBench {
           s"[scale] ignoring malformed SPARK_GRAFT_SHUFFLE_PARTITIONS='$v'")
         p
       }.getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val spark = graft.GraftSession.builder()
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -94,7 +94,7 @@ class DedupSpec extends SparkSpec {
         (header +: chunk).mkString("\n").getBytes)
     }
 
-    val single = CsvIngest.readPath(spark, singleDir, dense = true)
+    val single = CsvIngest.readPath(spark, singleDir)
     val multi = CsvIngest.readPathFileAware(spark, multiDir)
     // identical (row content, _row_id) assignments regardless of layout
     val cols = single.columns.sorted.map(col)

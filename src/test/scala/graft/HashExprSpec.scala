@@ -14,8 +14,6 @@ class HashExprSpec extends SparkSpec {
 
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   private lazy val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(80).cache()
 
   test("Md5Util.hash60 == conv(substring(md5,1,15),16,10)") {

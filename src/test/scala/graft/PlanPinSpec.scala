@@ -90,7 +90,6 @@ class PlanPinSpec extends SparkSpec {
     // replica; a refactor back would return identical rows and only
     // break the cost model.
     import graft.operators.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val cand = emb.select(col("vec_id"), col("embedding").as("_v"))
       .select(col("vec_id"),
@@ -119,7 +118,6 @@ class PlanPinSpec extends SparkSpec {
     // its exchange carries an array column; the only array-bearing
     // join is the row-linear re-attach.
     import graft.operators.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val out = Similarity.lshTopK(
       emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3)

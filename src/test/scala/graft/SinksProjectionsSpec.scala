@@ -1,11 +1,8 @@
 package graft
 
 import graft.config.{EntitySpec, FieldSpec, ProjectionSpec, Settings}
-import graft.ingest.CsvIngest
 import graft.project.Projections
 import graft.sinks.Sinks
-import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 class SinksProjectionsSpec extends SparkSpec {
 
@@ -40,31 +37,11 @@ class SinksProjectionsSpec extends SparkSpec {
     assert(warnings.size == 2)
   }
 
-  test("sharded (singleFile=false) export writes a standard csv directory") {
-    val dir = tmpDir("sink-sharded")
-    val df = (1L to 100L).toDF("n").repartition(4)
-    val path = Sinks.exportProjection(df, "big", dir, singleFile = false)
-    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(path))
-      .iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
-    assert(parts > 1) // no single-node merge bottleneck
-    assert(spark.read.option("header", "true").csv(path).count() == 100)
-  }
-
   test("json single-file export round-trips") {
     val dir = tmpDir("sink-json")
     val df = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
     val path = Sinks.exportProjection(df, "j", dir, format = "json")
     assert(path.endsWith("exports/j.json"))
     assert(spark.read.json(path).count() == 2)
-  }
-
-  test("ordering-only row ids (dense=false) are order-consistent with input") {
-    val dir = tmpDir("ingest-mono")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/d.csv"),
-      "v\n" + (1 to 50).mkString("\n"))
-    val got = CsvIngest.readPath(spark, s"$dir/d.csv", dense = false)
-      .select($"v".cast("int"), col(CsvIngest.RowId))
-      .as[(Int, Long)].collect().sortBy(_._2).map(_._1)
-    assert(got.toSeq == (1 to 50)) // id order == input order, values sparse
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import graft.functions.GraftFunctions
 import graft.operators.SkewTools
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 class SkewAndExtensionsSpec extends SparkSpec {
@@ -65,16 +67,59 @@ class SkewAndExtensionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions installs every native function builder") {
-    // a fresh session cannot be built in a JVM that already has one
-    // (getOrCreate would return it, silently skipping extensions), so
-    // drive the injection hook directly with a real extensions object
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext) // must not throw
-    // and the same builders are live in SQL via the imperative path
-    graft.functions.GraftFunctions.register(spark)
+    // the test session comes from GraftSession, which installs the
+    // extensions: every name resolves in SQL with no register call, and
+    // the registry entry is the extension's (register would have
+    // recorded its builder's class name instead of "graft")
+    val registry = spark.sessionState.functionRegistry
+    for (name <- GraftFunctions.functions.keys) {
+      assert(registry.lookupFunction(FunctionIdentifier(name)).map(_.getClassName)
+        .contains("graft"), name)
+      assert(spark.sql(s"DESCRIBE FUNCTION $name").collect().nonEmpty, name)
+    }
     val n = spark.sql(
       "SELECT graft_simhash60(graft_hashed_shingles('a b c d e', 2)) AS h")
       .collect().head.getLong(0)
     assert(n != 0L)
+  }
+
+  test("register fills a session that lacks the functions, then changes nothing") {
+    // the builders are shared `functions` values, so a re-registration
+    // shows as a fresh ExpressionInfo next to the same builder
+    def entries(s: SparkSession) = GraftFunctions.functions.keys.map { name =>
+      val id = FunctionIdentifier(name)
+      val registry = s.sessionState.functionRegistry
+      name -> registry.lookupFunction(id).zip(registry.lookupFunctionBuilder(id))
+    }.toMap
+    val bare = spark.newSession()
+    GraftFunctions.functions.keys.foreach(n =>
+      bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier(n)))
+    assert(entries(bare).values.forall(_.isEmpty))
+    GraftFunctions.register(bare)
+    val simhash = "SELECT graft_simhash60(graft_hashed_shingles('a b c d e', 2))"
+    assert(bare.sql(simhash).head().getLong(0) == spark.sql(simhash).head().getLong(0))
+    for (s <- Seq(bare, spark)) {
+      val before = entries(s)
+      GraftFunctions.register(s)
+      GraftFunctions.register(s)
+      val after = entries(s)
+      for ((name, entry) <- before) {
+        val (info, builder) = entry.getOrElse(fail(s"$name is not registered"))
+        val (info2, builder2) = after(name).get
+        assert((info2 eq info) && (builder2 eq builder), name)
+      }
+    }
+  }
+
+  test("positive-integer env dials reject bad values with the name and value") {
+    assert(GraftSession.parsePositive("SPARK_GRAFT_CPUS", "4") == 4)
+    assert(GraftSession.parsePositive("SPARK_GRAFT_CPUS", " 8 ") == 8)
+    for (bad <- Seq("0", "-1", "x", "", "2.5")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.parsePositive("SPARK_GRAFT_VERIFY_THREADS", bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_VERIFY_THREADS") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    assert(GraftSession.positiveIntEnv("SPARK_GRAFT_NO_SUCH_DIAL", 7) == 7)
   }
 }

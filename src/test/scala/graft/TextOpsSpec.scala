@@ -83,7 +83,6 @@ class TextOpsSpec extends SparkSpec {
   test("BestCentroid kernel is bit-for-bit the composed argmin, incl. degenerate inputs") {
     import graft.functions.GraftFunctions
     import org.apache.spark.sql.functions.{array_sort, coalesce, collect_list, isnan, slice, struct, transform, when, explode, broadcast}
-    GraftFunctions.register(spark)
     // codebook with a zero-norm centroid (NaN cosine), a
     // dim-mismatched centroid (null cosine), a null-element centroid,
     // and two identical centroids (negsim tie → smaller cell wins)
